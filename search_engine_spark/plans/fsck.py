@@ -69,35 +69,27 @@ def _check_term(term: str, df: int, bucket: int, searcher, errors: list,
         )
     segs = searcher._segments(term)
     all_docs = []
-    for salt, group in segs.groupby("salt"):
-        group = group.sort_values("seg")
-        prev_last = None
-        for row in group.itertuples(index=False):
-            docs, tfs = decode_postings(row.doc_ids, row.tfs)
-            dls = decode_varints(row.doclens)
-            if not (len(docs) == len(tfs) == len(dls) == row.n):
-                errors.append(
-                    f"I3 length: {term!r} salt={salt} seg={row.seg} "
-                    f"n={row.n} decoded={len(docs)}/{len(tfs)}/{len(dls)}"
-                )
-            if len(docs) and np.any(np.diff(docs) <= 0):
-                errors.append(
-                    f"I3 order: {term!r} salt={salt} seg={row.seg} "
-                    "doc_ids not strictly increasing"
-                )
-            if prev_last is not None and len(docs) and docs[0] <= prev_last:
-                errors.append(
-                    f"I3 order: {term!r} salt={salt} seg={row.seg} "
-                    "overlaps previous segment"
-                )
-            if len(docs):
-                prev_last = int(docs[-1])
-            if np.any(dls <= 0):
-                errors.append(
-                    f"I6 doclen: {term!r} salt={salt} seg={row.seg} "
-                    "non-positive doclen"
-                )
-            all_docs.append(docs)
+    prev_salt = prev_last = None
+    # raw, unmasked per-segment decode in (salt, seg) order
+    for r in np.lexsort((segs.seg, segs.salt)):
+        salt, n = int(segs.salt[r]), int(segs.n[r])
+        at = f"{term!r} salt={salt} seg={int(segs.seg[r])}"
+        if salt != prev_salt:
+            prev_salt, prev_last = salt, None
+        docs, tfs = decode_postings(segs.doc_ids[r], segs.tfs[r])
+        dls = decode_varints(segs.doclens[r])
+        if not (len(docs) == len(tfs) == len(dls) == n):
+            errors.append(f"I3 length: {at} n={n} "
+                          f"decoded={len(docs)}/{len(tfs)}/{len(dls)}")
+        if len(docs) and np.any(np.diff(docs) <= 0):
+            errors.append(f"I3 order: {at} doc_ids not strictly increasing")
+        if prev_last is not None and len(docs) and docs[0] <= prev_last:
+            errors.append(f"I3 order: {at} overlaps previous segment")
+        if len(docs):
+            prev_last = int(docs[-1])
+        if np.any(dls <= 0):
+            errors.append(f"I6 doclen: {at} non-positive doclen")
+        all_docs.append(docs)
     docs = np.concatenate(all_docs) if all_docs else np.empty(0, np.int64)
     uniq = np.unique(docs)
     if uniq.size != docs.size:
@@ -132,8 +124,8 @@ def _check_positions(index_dir: str, terms, searcher, errors: list) -> int:
         checked += 1
         pos_n = dict(zip(tbl["doc_id"].to_pylist(), tbl["npos"].to_pylist()))
         segs = searcher._segments(term)
-        for row in segs.itertuples(index=False):
-            docs, tfs = decode_postings(row.doc_ids, row.tfs)
+        for blob_d, blob_t in zip(segs.doc_ids, segs.tfs):
+            docs, tfs = decode_postings(blob_d, blob_t)
             for d, tf in zip(docs, tfs):
                 got = pos_n.get(int(d))
                 if got != int(tf):

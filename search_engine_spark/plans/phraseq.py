@@ -61,7 +61,6 @@ import re
 import numpy as np
 
 from search_engine_spark import K1
-from search_engine_spark.functions.codec import decode_postings, decode_varints
 from search_engine_spark.functions.text import analyze
 
 _PHRASE_RE = re.compile(r'(-?)"([^"]*)"(~\d+)?(\^\S+)?')
@@ -142,34 +141,19 @@ _DL_CACHE_MAX = 64
 
 def _doclens(searcher, term: str, docs: np.ndarray) -> np.ndarray:
     """Per-doc lengths for `docs` from `term`'s body postings
-    (docs ⊆ term's doc list by construction — every phrase match
-    contains every phrase token). The merged (doc_ids, doclens)
-    arrays are memoized per searcher — decoding a stopword anchor's
-    postings was the measured cost of warm repeated phrase-clause
-    queries (doclens are build-time constants, so the cache never
-    stales; deletes don't change survivors' lengths)."""
-    cache = searcher.__dict__.setdefault("_phraseq_dl_cache", {})
-    hit = cache.get(term)
-    if hit is not None:
-        cache[term] = cache.pop(term)  # LRU refresh
-        ad, al = hit
-    else:
-        segs = searcher._segments(term)
-        parts_d: list[np.ndarray] = []
-        parts_l: list[np.ndarray] = []
-        for row in segs.itertuples(index=False):
-            d, _ = decode_postings(row.doc_ids, row.tfs)
-            parts_d.append(d)
-            parts_l.append(decode_varints(row.doclens).astype(np.int64))
-        if not parts_d:
-            return np.zeros(docs.size, dtype=np.int64)
-        ad = np.concatenate(parts_d)
-        al = np.concatenate(parts_l)
-        order = np.argsort(ad, kind="stable")
-        ad, al = ad[order], al[order]
-        if len(cache) >= _DL_CACHE_MAX:
-            cache.pop(next(iter(cache)))
-        cache[term] = (ad, al)
+    (docs ⊆ term's live doc list by construction — every phrase match
+    contains every phrase token). The decoded (doc_ids, doclens)
+    arrays are memoized per searcher in its _doclen_cache — decoding
+    a stopword anchor's postings was the measured cost of warm
+    repeated phrase-clause queries (refresh_deletes clears it)."""
+    hit = searcher._lru_hit(searcher._doclen_cache, term)
+    if hit is None:
+        ad, _, al = searcher._postings(term)
+        hit = (ad, al)
+        searcher._lru_put(searcher._doclen_cache, term, hit, _DL_CACHE_MAX)
+    ad, al = hit
+    if ad.size == 0:
+        return np.zeros(docs.size, dtype=np.int64)
     pos = np.searchsorted(ad, docs)
     pos = np.minimum(pos, ad.size - 1)
     return al[pos]
@@ -421,21 +405,14 @@ def explain_mixed(
     dl_val: int | None = None
 
     def _doc_tf(term: str) -> tuple[int, int]:
-        """(tf, doclen) of the doc in a term's postings (0, 0) if
-        absent — also memoizes doclen for the phrase rows."""
+        """(tf, doclen) of the doc in a term's live postings, (0, 0)
+        if absent — also memoizes doclen for the phrase rows."""
         nonlocal dl_val
-        if term not in searcher._df:
+        hit = searcher._doc_posting(term, doc_id)
+        if hit is None:
             return 0, 0
-        segs = searcher._segments(term)
-        for row in segs.itertuples(index=False):
-            if row.first_doc <= doc_id <= row.last_doc:
-                docs, tfs = decode_postings(row.doc_ids, row.tfs)
-                pos = np.searchsorted(docs, doc_id)
-                if pos < docs.size and docs[pos] == doc_id:
-                    dls = decode_varints(row.doclens).astype(np.int64)
-                    dl_val = int(dls[pos])
-                    return int(tfs[pos]), dl_val
-        return 0, 0
+        dl_val = hit[1]
+        return hit
 
     # term clauses first (they establish doclen for the phrase rows
     # of docs that match any group term)

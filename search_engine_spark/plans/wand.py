@@ -36,9 +36,10 @@ import heapq
 import math
 import os
 import time
+from dataclasses import dataclass
 
 import numpy as np
-import pandas as pd
+import pyarrow.compute as pc
 import pyarrow.dataset as ds
 import pyarrow.parquet as pq
 
@@ -82,13 +83,85 @@ def _overlap_bound(of: np.ndarray, ol: np.ndarray, ob: np.ndarray,
     return np.minimum(a, b)
 
 
+def _lmd_contrib(tfs: np.ndarray, dls: np.ndarray, mu: float,
+                 p_t: float) -> np.ndarray:
+    """Per-posting LM-Dirichlet contributions (see search_lmd)."""
+    return (np.log1p(tfs.astype(np.float64) / (mu * p_t))
+            + np.log(mu / (mu + dls.astype(np.float64))))
+
+
+_SEG_META = ("seg", "salt", "n", "max_tfnorm", "first_doc", "last_doc")
+_SEG_BLOBS = ("doc_ids", "tfs", "doclens")
+
+
+@dataclass(frozen=True)
+class SegmentTable:
+    """One term's posting segments as parallel columns, one entry per
+    stored segment in row-group order: read-only numpy metadata
+    (seg, salt, n, max_tfnorm, first_doc, last_doc) plus the three
+    compressed blob columns (lists of bytes). max_tfnorm already
+    carries the index's tfnorm_scale. LocalSearcher._segments is the
+    only producer; LocalSearcher._postings the one masked decoder."""
+
+    seg: np.ndarray
+    salt: np.ndarray
+    n: np.ndarray
+    max_tfnorm: np.ndarray
+    first_doc: np.ndarray
+    last_doc: np.ndarray
+    doc_ids: list
+    tfs: list
+    doclens: list
+
+    def __len__(self) -> int:
+        return len(self.doc_ids)
+
+    @classmethod
+    def from_arrow(cls, tables: list, tfnorm_scale: float) -> "SegmentTable":
+        cols = {}
+        for name in _SEG_META:
+            arrs = [t.column(name).to_numpy() for t in tables]
+            a = (np.concatenate(arrs) if arrs else
+                 np.empty(0, np.float64 if name == "max_tfnorm" else np.int64))
+            if name == "max_tfnorm" and tfnorm_scale != 1.0:
+                a = a * tfnorm_scale
+            a.flags.writeable = False
+            cols[name] = a
+        for name in _SEG_BLOBS:
+            cols[name] = [b for t in tables for b in t.column(name).to_pylist()]
+        return cls(**cols)
+
+
+_NO_SEGMENTS = SegmentTable.from_arrow([], 1.0)
+
+
+def _term_row_groups(table_dir: str) -> tuple[dict, dict]:
+    """Footer-only index of a bucketed, term-sorted table: bucket ->
+    [(path, row group, min term, max term)], and path -> ParquetFile."""
+    rgs: dict[int, list[tuple[str, int, str, str]]] = {}
+    files: dict[str, pq.ParquetFile] = {}
+    for frag in ds.dataset(table_dir, format="parquet",
+                           partitioning="hive").get_fragments():
+        path = frag.path
+        bucket = int(path.split("bucket=")[1].split("/")[0])
+        pf = files[path] = pq.ParquetFile(path)
+        term_idx = pf.schema_arrow.get_field_index("term")
+        md = pf.metadata
+        for rg in range(md.num_row_groups):
+            st = md.row_group(rg).column(term_idx).statistics
+            rgs.setdefault(bucket, []).append(
+                (path, rg, st.min if st is not None else None,
+                 st.max if st is not None else None)
+            )
+    return rgs, files
+
+
 class _LazyTermMap:
     """Mapping view over the lazy dictionary: `term in m` / `m[term]`
-    without materializing the vocabulary (field = 'df' or 'bucket')."""
+    (the term's df) without materializing the vocabulary."""
 
-    def __init__(self, searcher: "LocalSearcher", field: str):
+    def __init__(self, searcher: "LocalSearcher"):
         self._s = searcher
-        self._i = 0 if field == "df" else 1
 
     def __contains__(self, term: str) -> bool:
         return self._s._dict_lookup(term) is not None
@@ -97,7 +170,7 @@ class _LazyTermMap:
         row = self._s._dict_lookup(term)
         if row is None:
             raise KeyError(term)
-        return row[self._i]
+        return row[0]
 
 
 class LocalSearcher:
@@ -112,10 +185,16 @@ class LocalSearcher:
     bounded by the caches, not the vocabulary size (a 10^8-term
     dictionary would otherwise be tens of GB of Python dicts on a
     serving node).
+
+    Postings are read the same way: a term's segment rows come from
+    the admitting row groups, are filtered to the term in Arrow and
+    kept as one immutable SegmentTable (_segments, LRU-cached). Every
+    scorer then decodes through one tombstone-masking, doc-sorted
+    decoder (_postings); _seg_decode caches per-segment decodes for
+    the block-max scorers on top of it.
     """
 
-    _COLUMNS = ["term", "seg", "salt", "n", "doc_ids", "tfs", "doclens",
-                "max_tfnorm", "first_doc", "last_doc"]
+    _COLUMNS = ["term", *_SEG_META, *_SEG_BLOBS]
     _DICT_CACHE = 65536
 
     def __init__(self, index_dir: str, *, cache_terms: int = 256,
@@ -151,14 +230,14 @@ class LocalSearcher:
         requested = index_dir
         index_dir = resolve_root(index_dir)
         self.root = index_dir
-        st = pq.read_table(os.path.join(index_dir, "stats")).to_pandas()
-        self.n_docs = int(st.n_docs.iloc[0])
-        self.avgdl = float(st.avgdl.iloc[0])
+        st = pq.read_table(os.path.join(index_dir, "stats"))
+        self.n_docs = int(st["n_docs"][0].as_py())
+        self.avgdl = float(st["avgdl"][0].as_py())
         # exact total token count (collection LM denominator for the
         # Dirichlet similarity); pre-sum_doclen indexes reconstruct it
         # from the floating avgdl — identical up to rounding
         self.sum_doclen = (
-            int(st.sum_doclen.iloc[0]) if "sum_doclen" in st.columns
+            int(st["sum_doclen"][0].as_py()) if "sum_doclen" in st.column_names
             else int(round(self.n_docs * self.avgdl))
         )
         self._docstore = None  # lazy; only more_like_this needs it
@@ -196,54 +275,35 @@ class LocalSearcher:
             d = pq.read_table(
                 os.path.join(index_dir, "dictionary"),
                 columns=["term", "df", "bucket"],
-            ).to_pandas()
-            self._eager_df = dict(zip(d.term, d.df.astype(int)))
-            self._eager_bucket = dict(zip(d.term, d.bucket.astype(int)))
+            )
+            terms = d["term"].to_pylist()
+            self._eager_df = dict(zip(terms, d["df"].to_pylist()))
+            self._eager_bucket = dict(zip(terms, d["bucket"].to_pylist()))
             self.n_buckets = 1 + max(self._eager_bucket.values(), default=0)
         else:
-            for frag in ds.dataset(
-                os.path.join(index_dir, "dictionary"), format="parquet",
-                partitioning="hive",
-            ).get_fragments():
-                path = frag.path
-                bucket = int(path.split("bucket=")[1].split("/")[0])
-                pf = pq.ParquetFile(path)
-                self._dict_files[path] = pf
-                term_idx = pf.schema_arrow.get_field_index("term")
-                md = pf.metadata
-                for rg in range(md.num_row_groups):
-                    stats = md.row_group(rg).column(term_idx).statistics
-                    lo = stats.min if stats is not None else None
-                    hi = stats.max if stats is not None else None
-                    self._dict_rg.setdefault(bucket, []).append((path, rg, lo, hi))
-        self._dict_cache: dict[str, tuple[int, int] | None] = {}
-        self._df = _LazyTermMap(self, "df")
-        self._bucket = _LazyTermMap(self, "bucket")
-        self._dataset = ds.dataset(
-            os.path.join(index_dir, "postings"), format="parquet",
-            partitioning="hive",
+            self._dict_rg, self._dict_files = _term_row_groups(
+                os.path.join(index_dir, "dictionary")
+            )
+        # one pruned dictionary read serves df AND cf (pre-cf
+        # dictionaries: cf=None)
+        self._dict_cols = ["term", "df"] + (
+            ["cf"] if self._dict_files and all(
+                "cf" in pf.schema_arrow.names
+                for pf in self._dict_files.values()
+            ) else []
         )
+        self._dict_cache: dict[str, tuple[int, int, int | None] | None] = {}
+        self._df = _LazyTermMap(self)
         # Footer-built row-group index: one pass over parquet metadata
         # at open time -> per-query reads touch ONLY the row groups
         # whose term range covers the query term (the on-disk seek
         # structure; the reference's analogue is its term->offset
         # dictionary [PK, SURVEY.md 1.2]). Files are written sorted by
         # (term, doc_id), so ranges are tight.
-        self._rg: dict[int, list[tuple[str, int, str, str]]] = {}
-        self._files: dict[str, pq.ParquetFile] = {}
-        for frag in self._dataset.get_fragments():
-            path = frag.path
-            bucket = int(path.split("bucket=")[1].split("/")[0])
-            pf = pq.ParquetFile(path)
-            self._files[path] = pf
-            term_idx = pf.schema_arrow.get_field_index("term")
-            md = pf.metadata
-            for rg in range(md.num_row_groups):
-                stats = md.row_group(rg).column(term_idx).statistics
-                lo = stats.min if stats is not None else None
-                hi = stats.max if stats is not None else None
-                self._rg.setdefault(bucket, []).append((path, rg, lo, hi))
-        self._term_cache: dict[str, pd.DataFrame] = {}
+        self._rg, self._files = _term_row_groups(
+            os.path.join(index_dir, "postings")
+        )
+        self._term_cache: dict[str, SegmentTable] = {}
         self._fast = True
         # per-term query counts: a term is promoted to the full-list
         # cache (enabling the vectorized warm path) on its SECOND
@@ -253,10 +313,13 @@ class LocalSearcher:
         # decoded (docs, tfs, doclens) per term — serving-path hot-set
         # cache so repeated queries skip varint decode entirely
         self._decoded_cache: dict[str, tuple] = {}
-        # per-(salt, seg) decodes of driving-term segments (kept
-        # segment-granular so block-max pruning still avoids decoding
-        # cold segments on first contact)
+        # per-segment decodes of driving-term segments, keyed by
+        # SegmentTable row (kept segment-granular so block-max pruning
+        # still avoids decoding cold segments on first contact)
         self._seg_decoded: dict[str, dict] = {}
+        # term -> doc-sorted (doc_ids, doclens) for plans/phraseq's
+        # phrase tfnorm (bounded there, 64 terms)
+        self._doclen_cache: dict[str, tuple] = {}
         self._cache_terms = cache_terms
         # tombstoned doc_ids (plans/deletes): masked out of every
         # decode, so all downstream paths — block-max, warm vectorized,
@@ -283,7 +346,6 @@ class LocalSearcher:
         # per-segment LMD bounds need
         self._lmd_cache: dict[tuple, tuple] = {}
         self._lmd_dl_range: tuple[int, int] | None = None
-        self._dict_cf_cache: dict[str, int | None] = {}
         boosts_dir = os.path.join(index_dir, "boosts")
         # fail LOUDLY on a corrupt boosts table — serving with a bad
         # prior mis-ranks every query. fsck passes load_boosts=False
@@ -366,6 +428,7 @@ class LocalSearcher:
         self._decoded_cache.clear()
         self._seg_decoded.clear()
         self._lmd_cache.clear()
+        self._doclen_cache.clear()
 
     def prefix_terms(
         self, prefix: str, limit: int = 1000
@@ -504,7 +567,8 @@ class LocalSearcher:
         filter-clause semantics (removal-only, applied before
         top-k). mode='and' keeps docs matching every present query
         term; absent terms make AND unsatisfiable (BM25 `search`
-        convention), OR drops them."""
+        convention), OR drops them. Static boosts (_boost) are never
+        applied: the additive prior is BM25-calibrated."""
         if mode not in ("and", "or"):
             raise ValueError(f"mode must be 'and' or 'or', got {mode!r}")
         if isinstance(qtext_or_terms, str):
@@ -537,34 +601,19 @@ class LocalSearcher:
         total = float(self.sum_doclen)
         doc_parts, contrib_parts = [], []
         for t in qterms:
-            segs = self._segments(t)
-            t_docs, t_tfs, t_dls = [], [], []
-            for row in segs.itertuples(index=False):
-                cand, ctf = decode_postings(row.doc_ids, row.tfs)
-                cdl = decode_varints(row.doclens).astype(np.int64)
-                cand, ctf, cdl = mask_deleted(self._deleted, cand, ctf, cdl)
-                if cand.size:
-                    t_docs.append(cand)
-                    t_tfs.append(ctf)
-                    t_dls.append(cdl)
-            if not t_docs:
+            docs, tfs, dls = self._postings(t)
+            if not docs.size:
                 if mode == "and":
                     return []
                 continue
-            docs = np.concatenate(t_docs)
-            tfs = np.concatenate(t_tfs).astype(np.float64)
-            dls = np.concatenate(t_dls).astype(np.float64)
             # cf is a sum of per-doc tfs — an exact integer < 2^53,
-            # so float64 addition is order-independent and the
-            # federated override (sum of per-sub term_cf) is
-            # bit-equal to the merged index's own tfs.sum()
-            cf = (float(self._lmd_cf[t]) if self._lmd_cf is not None
-                  else tfs.sum())
-            p_t = cf / total
+            # so it is order-independent and the federated override
+            # (sum of per-sub term_cf) is bit-equal to the merged
+            # index's own tfs.sum()
+            cf = float(self._lmd_cf[t] if self._lmd_cf is not None
+                       else tfs.sum())
             doc_parts.append(docs)
-            contrib_parts.append(
-                np.log1p(tfs / (mu * p_t)) + np.log(mu / (mu + dls))
-            )
+            contrib_parts.append(_lmd_contrib(tfs, dls, mu, cf / total))
         if not doc_parts:
             return []
         n_present = len(doc_parts)
@@ -590,44 +639,7 @@ class LocalSearcher:
         addition is exact in any order). plans/federate sums this
         across sub-indexes to assemble the GLOBAL cf that makes
         federated LM-Dirichlet bit-identical to the merged index."""
-        if self._dict_lookup(term) is None:
-            return 0
-        total = 0
-        for row in self._segments(term).itertuples(index=False):
-            cand, ctf = decode_postings(row.doc_ids, row.tfs)
-            cand, ctf = mask_deleted(self._deleted, cand, ctf)
-            total += int(ctf.sum())
-        return total
-
-    def _dict_cf(self, term: str) -> int | None:
-        """Exact collection frequency from the dictionary (row-group
-        pruned read of the cf column, LRU-cached). None for absent
-        terms or pre-cf dictionaries."""
-        cache = self._dict_cf_cache
-        if term in cache:
-            v = cache.pop(term)
-            cache[term] = v
-            return v
-        import pyarrow.compute as pc
-
-        from search_engine_spark.functions.hashing import term_bucket
-
-        b = term_bucket(term, self.n_buckets)
-        val: int | None = None
-        for path, rg, lo, hi in self._dict_rg.get(b, ()):
-            if (lo is None or lo <= term) and (hi is None or term <= hi):
-                tbl = self._dict_files[path].read_row_groups(
-                    [rg], columns=["term", "cf"]
-                )
-                sel = tbl.filter(pc.equal(tbl["term"], term))
-                if sel.num_rows:
-                    raw = sel["cf"][0].as_py()
-                    val = None if raw is None else int(raw)
-                    break
-        if len(cache) >= self._DICT_CACHE:
-            cache.pop(next(iter(cache)))
-        cache[term] = val
-        return val
+        return int(self._postings(term)[1].sum())
 
     def _dl_range(self) -> tuple[int, int]:
         """(dl_min, dl_max) over the docs table, from parquet footer
@@ -682,28 +694,9 @@ class LocalSearcher:
         hit = self._lru_hit(self._lmd_cache, key)
         if hit is not None:
             return hit
-        segs = self._segments(term)
-        d_parts, c_parts = [], []
-        for row in segs.itertuples(index=False):
-            cand, ctf = decode_postings(row.doc_ids, row.tfs)
-            cdl = decode_varints(row.doclens).astype(np.int64)
-            cand, ctf, cdl = mask_deleted(self._deleted, cand, ctf, cdl)
-            if cand.size:
-                d_parts.append(cand)
-                c_parts.append(
-                    np.log1p(ctf.astype(np.float64) / (mu * p_t))
-                    + np.log(mu / (mu + cdl.astype(np.float64)))
-                )
-        if not d_parts:
-            out = (np.empty(0, np.int64), np.empty(0, np.float64))
-        else:
-            d = np.concatenate(d_parts)
-            c = np.concatenate(c_parts)
-            order = np.argsort(d, kind="stable")
-            out = (d[order], c[order])
-        if len(self._lmd_cache) >= self._cache_terms:
-            self._lmd_cache.pop(next(iter(self._lmd_cache)))
-        self._lmd_cache[key] = out
+        d, tf, dl = self._postings(term)
+        out = (d, _lmd_contrib(tf, dl, mu, p_t))
+        self._lru_put(self._lmd_cache, key, out, self._cache_terms)
         return out
 
     def _lmd_scatter(self, qterms, full, k, mode, excl, allow):
@@ -711,7 +704,11 @@ class LocalSearcher:
         lists — the LMD serving hot path (the exhaustive reduction
         minus the decode). Accumulation runs in ORIGINAL query-term
         order, so scores are bit-identical to the exhaustive path
-        (x+0.0 is a no-op for finite x)."""
+        (x+0.0 is a no-op for finite x). A query term with no live
+        postings here makes AND unsatisfiable, as on the exhaustive
+        path."""
+        if mode == "and" and any(not full[t][0].size for t in qterms):
+            return []
         parts = [full[t] for t in qterms if full[t][0].size]
         if not parts:
             return []
@@ -757,18 +754,11 @@ class LocalSearcher:
         Both regimes return results bit-identical to the exhaustive
         reduction (accumulation order preserved; tie-break strict)."""
         total = float(self.sum_doclen)
-        p_t: dict[str, float] = {}
-        for t in qterms:
-            cf = (self._lmd_cf[t] if self._lmd_cf is not None
-                  else self._dict_cf(t))
-            if cf is None or cf <= 0:
-                raise _LmdNoBounds()  # pre-cf dictionary -> exhaustive
-        # recompute AFTER the presence loop so a raise above leaves no
-        # partial state; cf values are re-read from the LRU caches
-        for t in qterms:
-            cf = (self._lmd_cf[t] if self._lmd_cf is not None
-                  else self._dict_cf(t))
-            p_t[t] = float(cf) / total
+        cf = {t: (self._lmd_cf[t] if self._lmd_cf is not None
+                  else self._dict_lookup(t)[2]) for t in qterms}
+        if any(c is None or c <= 0 for c in cf.values()):
+            raise _LmdNoBounds()  # pre-cf dictionary -> exhaustive
+        p_t = {t: float(c) / total for t, c in cf.items()}
 
         single_cold = (
             len(qterms) == 1
@@ -784,11 +774,8 @@ class LocalSearcher:
         segs = self._segments(t)
         if len(segs) == 0:
             return []
-        bounds = self._lmd_seg_bounds(
-            segs.max_tfnorm.to_numpy(), p_t[t], mu
-        )
+        bounds = self._lmd_seg_bounds(segs.max_tfnorm, p_t[t], mu)
         order = np.argsort(-bounds, kind="stable")
-        rows = list(segs.itertuples(index=False))
         heap: list[tuple[float, int]] = []
         skipped = 0
         for n_done, r in enumerate(order):
@@ -796,14 +783,10 @@ class LocalSearcher:
             if len(heap) == k and ub < heap[0][0]:  # strict: tie-safe
                 skipped += order.size - n_done
                 break
-            row = rows[r]
-            cand, ctf = decode_postings(row.doc_ids, row.tfs)
-            cdl = decode_varints(row.doclens).astype(np.int64)
-            cand, ctf, cdl = mask_deleted(self._deleted, cand, ctf, cdl)
+            cand, ctf, cdl = self._postings(t, (r,))
             if not cand.size:
                 continue
-            sc = (np.log1p(ctf.astype(np.float64) / (mu * p_t[t]))
-                  + np.log(mu / (mu + cdl.astype(np.float64))))
+            sc = _lmd_contrib(ctf, cdl, mu, p_t[t])
             if cand.size > k:
                 order_k = np.lexsort((cand, -sc))[:k]
                 cand, sc = cand[order_k], sc[order_k]
@@ -998,28 +981,25 @@ class LocalSearcher:
         overlap-aware upper bounds over ALL query terms; descending-
         bound order + strict '<' skip is exact, as in _search_or."""
         n_base = len(base_terms)
-        per_term = [(t, self._segments(t)) for t in base_terms]
         all_segs = {t: self._segments(t) for t in terms}
 
-        entries = []  # (ub, base_idx, row)
-        for i, (t, segs) in enumerate(per_term):
+        entries = []  # (ub, base_idx, segment row)
+        for i, t in enumerate(base_terms):
+            segs = all_segs[t]
             if len(segs) == 0:
                 continue
-            s_first = segs.first_doc.to_numpy()
-            s_last = segs.last_doc.to_numpy()
-            ub = (w[t] * idf[t]
-                  * segs.max_tfnorm.to_numpy().astype(np.float64))
+            ub = w[t] * idf[t] * segs.max_tfnorm
             for u in terms:
                 osegs = all_segs[u]
                 if u == t or len(osegs) == 0:
                     continue
                 ub = ub + w[u] * idf[u] * _overlap_bound(
-                    osegs.first_doc.to_numpy(), osegs.last_doc.to_numpy(),
-                    osegs.max_tfnorm.to_numpy(), s_first, s_last,
+                    osegs.first_doc, osegs.last_doc, osegs.max_tfnorm,
+                    segs.first_doc, segs.last_doc,
                 )
-            for r, row in enumerate(segs.itertuples(index=False)):
-                # +bmax keeps the bound valid over boosted final scores
-                entries.append((float(ub[r]) + self._bmax, i, row))
+            # +bmax keeps the bound valid over boosted final scores
+            entries.extend((float(b) + self._bmax, i, r)
+                           for r, b in enumerate(ub))
         entries.sort(key=lambda e: -e[0])
 
         heap: list[tuple[float, int]] = []
@@ -1035,13 +1015,13 @@ class LocalSearcher:
                 heapq.heapreplace(heap, item)
 
         skipped = 0
-        for n_done, (ub, i, row) in enumerate(entries):
+        for n_done, (ub, i, r) in enumerate(entries):
             # strict '<' keeps equal-score smaller-doc_id tie winners
             if len(heap) == k and ub < heap[0][0]:
                 skipped += len(entries) - n_done
                 break
             t = base_terms[i]
-            cand, c_contrib = self._seg_decode(t, row, idf[t])
+            cand, c_contrib = self._seg_decode(t, r, idf[t])
             scores = c_contrib * w[t]
             keep = self._eligible(cand, excl, allow)
             hits = {}
@@ -1112,23 +1092,16 @@ class LocalSearcher:
             if t in self._df and not deleted:
                 row["df"] = int(self._df[t])
                 row["idf"] = self._idf(t)
-                segs = self._segments(t)
-                hit = segs[(segs.first_doc <= doc_id)
-                           & (segs.last_doc >= doc_id)]
-                for seg in hit.itertuples(index=False):
-                    docs, tfs = decode_postings(seg.doc_ids, seg.tfs)
-                    i = int(np.searchsorted(docs, doc_id))
-                    if i < len(docs) and docs[i] == doc_id:
-                        dls = decode_varints(seg.doclens)
-                        row["matched"] = True
-                        row["tf"] = int(tfs[i])
-                        row["doclen"] = int(dls[i])
-                        row["tfnorm"] = float(self._tfnorm(
-                            np.asarray([tfs[i]]),
-                            np.asarray([dls[i]], dtype=np.int64),
-                        )[0])
-                        row["contribution"] = row["idf"] * row["tfnorm"]
-                        break
+                hit = self._doc_posting(t, doc_id)
+                if hit is not None:
+                    tf, dl = hit
+                    row["matched"] = True
+                    row["tf"] = tf
+                    row["doclen"] = dl
+                    row["tfnorm"] = float(self._tfnorm(
+                        np.asarray([tf]), np.asarray([dl], dtype=np.int64),
+                    )[0])
+                    row["contribution"] = row["idf"] * row["tfnorm"]
             total += row["contribution"]
             out_terms.append(row)
         static = 0.0
@@ -1186,36 +1159,41 @@ class LocalSearcher:
         hits = self.search(qterms, k=k + 1, mode="or", stem=stem)
         return [(d, s) for d, s in hits if d != int(doc_id)][:k]
 
-    def _dict_lookup(self, term: str) -> tuple[int, int] | None:
-        """(df, bucket) for term, or None if absent — row-group-pruned
-        dictionary read, LRU-cached (misses cached too: absent query
-        terms are common and must stay cheap)."""
+    @staticmethod
+    def _read_term(rgs, files: dict, term: str, columns: list):
+        """Yield `term`'s rows from each row group in `rgs` whose
+        [min, max] term-stats range admits it, filtered in Arrow."""
+        for path, rg, lo, hi in rgs:
+            if (lo is None or lo <= term) and (hi is None or term <= hi):
+                tbl = files[path].read_row_groups([rg], columns=columns)
+                yield tbl.filter(pc.equal(tbl["term"], term))
+
+    def _dict_lookup(self, term: str) -> tuple[int, int, int | None] | None:
+        """(df, bucket, cf) for term, or None if absent — one
+        row-group-pruned dictionary read, LRU-cached (misses cached
+        too: absent query terms are common and must stay cheap). cf is
+        the exact collection frequency, None on a pre-cf dictionary."""
         if self._eager:
             df = self._eager_df.get(term)
-            return None if df is None else (df, self._eager_bucket[term])
+            return (None if df is None
+                    else (df, self._eager_bucket[term], None))
         cache = self._dict_cache
         if term in cache:
             val = cache.pop(term)
             cache[term] = val  # refresh recency
             return val
-        import pyarrow.compute as pc
-
         from search_engine_spark.functions.hashing import term_bucket
 
         b = term_bucket(term, self.n_buckets)
         row = None
-        for path, rg, lo, hi in self._dict_rg.get(b, ()):
-            if (lo is None or lo <= term) and (hi is None or term <= hi):
-                tbl = self._dict_files[path].read_row_groups(
-                    [rg], columns=["term", "df"]
-                )
-                sel = tbl.filter(pc.equal(tbl["term"], term))
-                if sel.num_rows:
-                    row = (int(sel["df"][0].as_py()), b)
-                    break
-        if len(cache) >= self._DICT_CACHE:
-            cache.pop(next(iter(cache)))
-        cache[term] = row
+        for sel in self._read_term(self._dict_rg.get(b, ()),
+                                   self._dict_files, term, self._dict_cols):
+            if sel.num_rows:
+                cf = sel["cf"][0].as_py() if "cf" in sel.column_names else None
+                row = (int(sel["df"][0].as_py()), b,
+                       None if cf is None else int(cf))
+                break
+        self._lru_put(cache, term, row, self._DICT_CACHE)
         return row
 
     def _idf(self, term: str) -> float:
@@ -1236,29 +1214,65 @@ class LocalSearcher:
             cache[key] = cache.pop(key)
         return v
 
-    def _segments(self, term: str) -> pd.DataFrame:
-        """All segment rows for a term (metadata + blobs), read from
-        exactly the row groups whose stats admit the term; LRU-cached
-        per term for the serving hot set."""
+    @staticmethod
+    def _lru_put(cache: dict, key, value, cap: int) -> None:
+        """Insert into a dict-as-LRU, evicting the least recent entry
+        once `cap` entries are held."""
+        if len(cache) >= cap:
+            cache.pop(next(iter(cache)))
+        cache[key] = value
+
+    def _segments(self, term: str) -> SegmentTable:
+        """`term`'s SegmentTable, read from exactly the row groups
+        whose stats admit the term and filtered to it in Arrow;
+        LRU-cached per term for the serving hot set. An absent term
+        has an empty table."""
         hit = self._lru_hit(self._term_cache, term)
         if hit is not None:
             return hit
-        parts = []
-        for path, rg, lo, hi in self._rg.get(self._bucket[term], ()):
-            if (lo is None or lo <= term) and (hi is None or term <= hi):
-                tbl = self._files[path].read_row_groups([rg], columns=self._COLUMNS)
-                pdf = tbl.to_pandas()
-                parts.append(pdf[pdf.term == term])
-        out = (
-            pd.concat(parts, ignore_index=True)
-            if parts else pd.DataFrame(columns=self._COLUMNS)
+        row = self._dict_lookup(term)
+        if row is None:
+            return _NO_SEGMENTS
+        out = SegmentTable.from_arrow(
+            list(self._read_term(self._rg.get(row[1], ()), self._files,
+                                 term, self._COLUMNS)),
+            self._tfnorm_scale,
         )
-        if self._tfnorm_scale != 1.0 and len(out):
-            out = out.assign(max_tfnorm=out.max_tfnorm * self._tfnorm_scale)
-        if len(self._term_cache) >= self._cache_terms:
-            self._term_cache.pop(next(iter(self._term_cache)))
-        self._term_cache[term] = out
+        self._lru_put(self._term_cache, term, out, self._cache_terms)
         return out
+
+    def _postings(self, term: str, idx=None):
+        """The one postings decoder: doc-sorted (doc_ids, tfs, doclens)
+        int64 arrays over the SegmentTable rows `idx` of `term` (all
+        rows when None), tombstoned docs masked out. Segments are
+        concatenated in table order and merged by a stable sort, so
+        every scorer built on it sums in one fixed order."""
+        segs = self._segments(term)
+        parts = []
+        for r in (range(len(segs)) if idx is None else idx):
+            docs, tfs = decode_postings(segs.doc_ids[r], segs.tfs[r])
+            dls = decode_varints(segs.doclens[r]).astype(np.int64)
+            parts.append(mask_deleted(self._deleted, docs, tfs, dls))
+        if len(parts) == 1:
+            return parts[0]
+        if not parts:
+            return tuple(np.empty(0, np.int64) for _ in range(3))
+        d, tf, dl = (np.concatenate(c) for c in zip(*parts))
+        order = np.argsort(d, kind="stable")
+        return d[order], tf[order], dl[order]
+
+    def _doc_posting(self, term: str, doc_id: int) -> tuple[int, int] | None:
+        """(tf, doclen) of one live doc in `term`'s postings, or None;
+        decodes only the segments whose [first_doc, last_doc] span
+        admits the doc (explain paths)."""
+        segs = self._segments(term)
+        idx = np.flatnonzero((segs.first_doc <= doc_id)
+                             & (segs.last_doc >= doc_id))
+        docs, tfs, dls = self._postings(term, idx)
+        i = int(np.searchsorted(docs, doc_id))
+        if i < docs.size and docs[i] == doc_id:
+            return int(tfs[i]), int(dls[i])
+        return None
 
     def _tfnorm(self, tf: np.ndarray, dl: np.ndarray) -> np.ndarray:
         tff = tf.astype(np.float64)
@@ -1266,23 +1280,21 @@ class LocalSearcher:
             tff + K1 * (1.0 - B + B * dl.astype(np.float64) / self.avgdl)
         )
 
-    def _seg_decode(self, term: str, row, idf_t: float):
-        """Decoded (doc_ids, idf*tfnorm contributions) for one segment,
-        cached per (term, salt, seg). The contribution array is
-        query-INDEPENDENT (idf is a corpus constant per term), so the
-        cache is shared by the AND and OR paths and across queries."""
-        hit_outer = self._lru_hit(self._seg_decoded, term)
-        if hit_outer is None and len(self._seg_decoded) >= self._cache_terms:
-            self._seg_decoded.pop(next(iter(self._seg_decoded)))
-        cache = self._seg_decoded.setdefault(term, {})
-        key = (row.salt, row.seg)
-        hit = cache.get(key)
+    def _seg_decode(self, term: str, r: int, idf_t: float):
+        """Decoded (doc_ids, idf*tfnorm contributions) for SegmentTable
+        row `r` of `term`, cached per (term, row). The contribution
+        array is query-INDEPENDENT (idf is a corpus constant per term),
+        so the cache is shared by the AND and OR paths and across
+        queries."""
+        cache = self._lru_hit(self._seg_decoded, term)
+        if cache is None:
+            cache = {}
+            self._lru_put(self._seg_decoded, term, cache, self._cache_terms)
+        hit = cache.get(r)
         if hit is None:
-            cand, ctf = decode_postings(row.doc_ids, row.tfs)
-            cdl = decode_varints(row.doclens).astype(np.int64)
-            cand, ctf, cdl = mask_deleted(self._deleted, cand, ctf, cdl)
+            cand, ctf, cdl = self._postings(term, (r,))
             hit = (cand, idf_t * self._tfnorm(ctf, cdl))
-            cache[key] = hit
+            cache[r] = hit
         return hit
 
     def _load_full(self, term: str, idf_t: float):
@@ -1292,11 +1304,10 @@ class LocalSearcher:
         hit = self._lru_hit(self._decoded_cache, term)
         if hit is not None:
             return hit
-        segs = self._segments(term)
-        if len(segs) == 0:
+        n = len(self._segments(term))
+        if n == 0:
             return np.empty(0, np.int64), np.empty(0, np.float64)
-        parts = [self._seg_decode(term, row, idf_t)
-                 for row in segs.itertuples(index=False)]
+        parts = [self._seg_decode(term, r, idf_t) for r in range(n)]
         if len(parts) == 1:
             out = parts[0]
         else:
@@ -1304,9 +1315,7 @@ class LocalSearcher:
             c = np.concatenate([p[1] for p in parts])
             order = np.argsort(d, kind="stable")
             out = (d[order], c[order])
-        if len(self._decoded_cache) >= self._cache_terms:
-            self._decoded_cache.pop(next(iter(self._decoded_cache)))
-        self._decoded_cache[term] = out
+        self._lru_put(self._decoded_cache, term, out, self._cache_terms)
         return out
 
     @staticmethod
@@ -1514,28 +1523,25 @@ class LocalSearcher:
             if self._warm(qterms):
                 return self._search_or_warm(qterms, idf, k, excl, after,
                                             msm, allow)
-        per_term = []  # (term, segs_df) in fixed dedup order
-        for t in qterms:
-            per_term.append((t, self._segments(t)))
+        # (term, segment table) in fixed dedup order
+        per_term = [(t, self._segments(t)) for t in qterms]
 
         # segment entries with full OR upper bounds
-        entries = []  # (ub, term_idx, row)
+        entries = []  # (ub, term_idx, segment row)
         for i, (t, segs) in enumerate(per_term):
             if len(segs) == 0:
                 continue
-            s_first = segs.first_doc.to_numpy()
-            s_last = segs.last_doc.to_numpy()
-            ub = idf[t] * segs.max_tfnorm.to_numpy().astype(np.float64)
+            ub = idf[t] * segs.max_tfnorm
             for j, (u, osegs) in enumerate(per_term):
                 if j == i or len(osegs) == 0:
                     continue
                 ub = ub + idf[u] * _overlap_bound(
-                    osegs.first_doc.to_numpy(), osegs.last_doc.to_numpy(),
-                    osegs.max_tfnorm.to_numpy(), s_first, s_last,
+                    osegs.first_doc, osegs.last_doc, osegs.max_tfnorm,
+                    segs.first_doc, segs.last_doc,
                 )
-            for r, row in enumerate(segs.itertuples(index=False)):
-                # +bmax keeps the bound valid over boosted final scores
-                entries.append((float(ub[r]) + self._bmax, i, row))
+            # +bmax keeps the bound valid over boosted final scores
+            entries.extend((float(b) + self._bmax, i, r)
+                           for r, b in enumerate(ub))
         entries.sort(key=lambda e: -e[0])
 
         heap: list[tuple[float, int]] = []
@@ -1555,13 +1561,13 @@ class LocalSearcher:
                 heapq.heapreplace(heap, item)
 
         skipped = 0
-        for n_done, (ub, i, row) in enumerate(entries):
+        for n_done, (ub, i, r) in enumerate(entries):
             # strict '<' keeps equal-score smaller-doc_id tie winners
             if prune and len(heap) == k and ub < heap[0][0]:
                 skipped += len(entries) - n_done
                 break
             t = per_term[i][0]
-            cand, scores = self._seg_decode(t, row, idf[t])
+            cand, scores = self._seg_decode(t, r, idf[t])
             scores = scores.copy()
             keep = self._eligible(cand, excl, allow)
             n_hit = np.ones(cand.size, dtype=np.int32) if msm > 1 else None
@@ -1689,38 +1695,22 @@ class LocalSearcher:
         r_lo = int(r_segs.first_doc.min())
         r_hi = int(r_segs.last_doc.max())
         other_lists: dict[str, tuple[np.ndarray, np.ndarray]] = {}
-        other_maxbound: dict[str, float] = {}
 
         def load_other(t: str):
             if t in other_lists:
                 return other_lists[t]
-            hit = self._lru_hit(self._decoded_cache, t)
-            if hit is not None:
-                other_lists[t] = hit
-                return hit
-            segs = self._segments(t)
-            keep = segs[(segs.last_doc >= r_lo) & (segs.first_doc <= r_hi)]
-            if len(keep) == 0:
-                out = (np.empty(0, np.int64), np.empty(0, np.float64))
-                other_lists[t] = out
-                return out
-            docs, tfs, dls = [], [], []
-            for row in keep.itertuples(index=False):
-                dd, tt = decode_postings(row.doc_ids, row.tfs)
-                docs.append(dd)
-                tfs.append(tt)
-                dls.append(decode_varints(row.doclens).astype(np.int64))
-            d = np.concatenate(docs)
-            order = np.argsort(d, kind="stable")
-            contrib = idf[t] * self._tfnorm(
-                np.concatenate(tfs)[order], np.concatenate(dls)[order]
-            )
-            out = mask_deleted(self._deleted, d[order], contrib)
-            # cache only full-span decodes (subsets depend on the query)
-            if len(keep) == len(segs):
-                if len(self._decoded_cache) >= self._cache_terms:
-                    self._decoded_cache.pop(next(iter(self._decoded_cache)))
-                self._decoded_cache[t] = out
+            out = self._lru_hit(self._decoded_cache, t)
+            if out is None:
+                segs = self._segments(t)
+                idx = np.flatnonzero((segs.last_doc >= r_lo)
+                                     & (segs.first_doc <= r_hi))
+                d, tf, dl = self._postings(t, idx)
+                out = (d, idf[t] * self._tfnorm(tf, dl))
+                # cache only full-span decodes (subsets depend on the
+                # query)
+                if idx.size and idx.size == len(segs):
+                    self._lru_put(self._decoded_cache, t, out,
+                                  self._cache_terms)
             other_lists[t] = out
             return out
 
@@ -1732,26 +1722,18 @@ class LocalSearcher:
         # non-overlapping segment cannot co-score any candidate), and
         # still an upper bound, so exactness is preserved while more
         # segments prune.
-        r_first = r_segs.first_doc.to_numpy()
-        r_last = r_segs.last_doc.to_numpy()
         others_ub_vec = np.zeros(len(r_segs), dtype=np.float64)
         for t in others:
             segs = self._segments(t)
             if len(segs) == 0:
-                other_maxbound[t] = 0.0
                 continue
-            tb_ = segs.max_tfnorm.to_numpy()
-            other_maxbound[t] = idf[t] * float(tb_.max())
             others_ub_vec += idf[t] * _overlap_bound(
-                segs.first_doc.to_numpy(), segs.last_doc.to_numpy(),
-                tb_, r_first, r_last,
+                segs.first_doc, segs.last_doc, segs.max_tfnorm,
+                r_segs.first_doc, r_segs.last_doc,
             )
 
         heap: list[tuple[float, int]] = []  # (score, -doc_id) min-heap
         a_item = (after[1], -int(after[0])) if after is not None else None
-
-        def theta() -> float:
-            return heap[0][0] if len(heap) == k else -math.inf
 
         def offer(doc: int, score: float) -> None:
             item = (score, -doc)
@@ -1764,22 +1746,18 @@ class LocalSearcher:
 
         # descending bound order grows theta fastest (+bmax keeps every
         # bound valid over statically-boosted final scores)
-        r_segs = r_segs.assign(
-            ub=idf[rarest] * r_segs.max_tfnorm.to_numpy() + others_ub_vec
-            + self._bmax
-        )
-        r_segs = r_segs.sort_values("ub", ascending=False)
+        ub = idf[rarest] * r_segs.max_tfnorm + others_ub_vec + self._bmax
+        order = np.argsort(-ub, kind="stable")
         skipped = 0
-        n_rows = len(r_segs)
-        for i, row in enumerate(r_segs.itertuples(index=False)):
+        for i, r in enumerate(order):
             # strict '<': a segment whose bound EQUALS theta may hold an
             # equal-score doc with a smaller doc_id (tie-break winner)
-            if prune and len(heap) == k and row.ub < theta():
+            if prune and len(heap) == k and ub[r] < heap[0][0]:
                 # bounds are sorted descending: everything after this
                 # row is pruned too — stop instead of scanning on
-                skipped += n_rows - i
+                skipped += order.size - i
                 break
-            cand, c_contrib = self._seg_decode(rarest, row, idf[rarest])
+            cand, c_contrib = self._seg_decode(rarest, r, idf[rarest])
             scores = c_contrib.copy()
             alive = self._eligible(cand, excl, allow)
             for t in others:
