@@ -1,22 +1,11 @@
-import contextlib
-import io
 import os
-import runpy
-import signal
-import subprocess
 import sys
-import traceback
 
 import pytest
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, REPO)
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
-
-# The repo's command-line entry points. Tests drive them as
-# ``subprocess.run([sys.executable, "<script>", ...])``.
-CLI_SCRIPTS = ("build_index.py", "query.py", "index_admin.py")
 
 
 @pytest.fixture(scope="session")
@@ -38,114 +27,3 @@ def documents_pdf():
     import pandas as pd
 
     return pd.read_parquet(os.path.join(SF_DIR, "documents.parquet"))
-
-
-def _cli_script(cmd, cwd):
-    """The repo script that ``cmd`` runs with this interpreter, or None."""
-    if not isinstance(cmd, (list, tuple)) or len(cmd) < 2:
-        return None
-    if cmd[0] != sys.executable:
-        return None
-    path = os.path.join(cwd or os.getcwd(), str(cmd[1]))
-    path = os.path.realpath(path)
-    if os.path.dirname(path) != os.path.realpath(REPO):
-        return None
-    return path if os.path.basename(path) in CLI_SCRIPTS else None
-
-
-def _run_cli_in_process(spark, path, cmd, *, cwd=None, env=None, check=False,
-                        text=False, timeout=None, **_):
-    """Run a repo CLI as ``__main__`` inside this process, on the test
-    session's JVM, and return what ``subprocess.run(cmd,
-    capture_output=True, text=True)`` returns: the exit code and the
-    text the script wrote to stdout and stderr.
-
-    A separate interpreter would start its own JVM (10-20 s per call on
-    a 4-core host) for the same work. Everything the script can change
-    in this process is put back afterwards: ``sys.argv``, ``sys.path``,
-    the working directory, the environment and the session's SQL confs
-    (its ``get_spark`` call applies the CLI's own confs to the running
-    session for the duration of the call). ``spark.stop()`` in the
-    script is a no-op here, so the session outlives it. ``timeout``
-    raises ``subprocess.TimeoutExpired`` as it does for a subprocess."""
-    from pyspark.sql import SparkSession
-
-    out, err = io.StringIO(), io.StringIO()
-    confs = dict(spark.conf.getAll)
-    saved_argv, saved_path, saved_cwd = sys.argv, list(sys.path), os.getcwd()
-    saved_env = dict(os.environ)
-    stop = SparkSession.stop
-    sys.argv = [path] + [str(a) for a in cmd[2:]]
-    if cwd is not None:
-        os.chdir(cwd)
-    if env is not None:
-        os.environ.clear()
-        os.environ.update(env)
-    SparkSession.stop = lambda self: None
-
-    expired = []
-
-    def expire(signum, frame):
-        expired.append(timeout)
-        raise subprocess.TimeoutExpired(cmd, timeout)
-
-    alarm = signal.signal(signal.SIGALRM, expire)
-    if timeout:
-        signal.setitimer(signal.ITIMER_REAL, timeout)
-    code = 0
-    try:
-        with contextlib.redirect_stdout(out), contextlib.redirect_stderr(err):
-            try:
-                runpy.run_path(path, run_name="__main__")
-            except SystemExit as e:
-                if e.code is None or isinstance(e.code, int):
-                    code = e.code or 0
-                else:  # SystemExit("message"): printed, exit status 1
-                    print(e.code, file=sys.stderr)
-                    code = 1
-            except Exception:
-                if expired:  # py4j may re-raise the timeout as its own error
-                    spark.sparkContext.cancelAllJobs()
-                    raise subprocess.TimeoutExpired(cmd, timeout) from None
-                traceback.print_exc()
-                code = 1
-    finally:
-        signal.setitimer(signal.ITIMER_REAL, 0)
-        signal.signal(signal.SIGALRM, alarm)
-        SparkSession.stop = stop
-        sys.argv = saved_argv
-        sys.path[:] = saved_path
-        os.chdir(saved_cwd)
-        os.environ.clear()
-        os.environ.update(saved_env)
-        now = dict(spark.conf.getAll)
-        for key in now.keys() - confs.keys():
-            if spark.conf.isModifiable(key):
-                spark.conf.unset(key)
-        for key, value in confs.items():
-            if now.get(key) != value and spark.conf.isModifiable(key):
-                spark.conf.set(key, value)
-    stdout, stderr = out.getvalue(), err.getvalue()
-    if not text:
-        stdout, stderr = stdout.encode(), stderr.encode()
-    result = subprocess.CompletedProcess(list(cmd), code, stdout, stderr)
-    if check:
-        result.check_returncode()
-    return result
-
-
-@pytest.fixture(autouse=True)
-def _repo_cli_in_process(request, monkeypatch):
-    """``subprocess.run([sys.executable, <repo CLI>, ...])`` runs the CLI
-    in this process (see ``_run_cli_in_process``); every other command
-    runs as a real subprocess."""
-    real_run = subprocess.run
-
-    def run(cmd, *args, **kwargs):
-        path = _cli_script(cmd, kwargs.get("cwd"))
-        if path is None or args:
-            return real_run(cmd, *args, **kwargs)
-        spark = request.getfixturevalue("spark")
-        return _run_cli_in_process(spark, path, cmd, **kwargs)
-
-    monkeypatch.setattr(subprocess, "run", run)
