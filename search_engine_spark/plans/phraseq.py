@@ -62,6 +62,7 @@ import numpy as np
 
 from search_engine_spark import K1
 from search_engine_spark.functions.text import analyze
+from search_engine_spark.plans.deletes import mask_deleted
 
 _PHRASE_RE = re.compile(r'(-?)"([^"]*)"(~\d+)?(\^\S+)?')
 
@@ -142,7 +143,8 @@ _DL_CACHE_MAX = 64
 def _doclens(searcher, term: str, docs: np.ndarray) -> np.ndarray:
     """Per-doc lengths for `docs` from `term`'s body postings
     (docs ⊆ term's live doc list by construction — every phrase match
-    contains every phrase token). The decoded (doc_ids, doclens)
+    contains every phrase token, and search_mixed drops the searcher's
+    tombstones from its candidates). The decoded (doc_ids, doclens)
     arrays are memoized per searcher in its _doclen_cache — decoding
     a stopword anchor's postings was the measured cost of warm
     repeated phrase-clause queries (refresh_deletes clears it)."""
@@ -260,6 +262,13 @@ def search_mixed(
         allow = nd if allow is None else np.intersect1d(
             allow, nd, assume_unique=True
         )
+        if allow.size == 0:
+            return []
+    # the searcher's tombstones are authoritative: a phraser opened
+    # before the searcher's last refresh_deletes must not surface a
+    # deleted doc (and _doclens only knows live docs)
+    if allow is not None:
+        (allow,) = mask_deleted(searcher._deleted, allow)
         if allow.size == 0:
             return []
     for toks, boost, neg, slop in negatives:

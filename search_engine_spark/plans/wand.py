@@ -310,8 +310,9 @@ class LocalSearcher:
         # encounter — first-contact queries keep block-max pruning's
         # decode avoidance, repeated ones amortize one full decode
         self._term_hits: dict[str, int] = {}
-        # decoded (docs, tfs, doclens) per term — serving-path hot-set
-        # cache so repeated queries skip varint decode entirely
+        # full-list (docs, idf*tfnorm) per term, filled by _load_full —
+        # serving-path hot-set cache so repeated queries skip varint
+        # decode entirely
         self._decoded_cache: dict[str, tuple] = {}
         # per-segment decodes of driving-term segments, keyed by
         # SegmentTable row (kept segment-granular so block-max pruning
@@ -1280,41 +1281,37 @@ class LocalSearcher:
             tff + K1 * (1.0 - B + B * dl.astype(np.float64) / self.avgdl)
         )
 
+    def _contribs(self, term: str, idf_t: float, idx=None):
+        """(doc_ids, idf*tfnorm contributions) over SegmentTable rows
+        `idx` of `term` (all when None) — _postings plus the BM25
+        arithmetic, element-wise, so every cached list below sums the
+        same floats."""
+        docs, tfs, dls = self._postings(term, idx)
+        return docs, idf_t * self._tfnorm(tfs, dls)
+
     def _seg_decode(self, term: str, r: int, idf_t: float):
-        """Decoded (doc_ids, idf*tfnorm contributions) for SegmentTable
-        row `r` of `term`, cached per (term, row). The contribution
-        array is query-INDEPENDENT (idf is a corpus constant per term),
-        so the cache is shared by the AND and OR paths and across
-        queries."""
+        """_contribs of SegmentTable row `r` of `term`, cached per
+        (term, row). The contribution array is query-INDEPENDENT (idf
+        is a corpus constant per term), so the cache is shared by the
+        AND and OR paths and across queries."""
         cache = self._lru_hit(self._seg_decoded, term)
         if cache is None:
             cache = {}
             self._lru_put(self._seg_decoded, term, cache, self._cache_terms)
         hit = cache.get(r)
         if hit is None:
-            cand, ctf, cdl = self._postings(term, (r,))
-            hit = (cand, idf_t * self._tfnorm(ctf, cdl))
-            cache[r] = hit
+            hit = cache[r] = self._contribs(term, idf_t, (r,))
         return hit
 
     def _load_full(self, term: str, idf_t: float):
-        """Merged sorted (doc_ids, contribs) over ALL of `term`'s
-        segments, cached query-independently (the same cache the AND
-        path's full-span other-term decodes use)."""
+        """_contribs over ALL of `term`'s segments, cached query-
+        independently — the only filler of the full-list cache."""
         hit = self._lru_hit(self._decoded_cache, term)
         if hit is not None:
             return hit
-        n = len(self._segments(term))
-        if n == 0:
+        if len(self._segments(term)) == 0:
             return np.empty(0, np.int64), np.empty(0, np.float64)
-        parts = [self._seg_decode(term, r, idf_t) for r in range(n)]
-        if len(parts) == 1:
-            out = parts[0]
-        else:
-            d = np.concatenate([p[0] for p in parts])
-            c = np.concatenate([p[1] for p in parts])
-            order = np.argsort(d, kind="stable")
-            out = (d[order], c[order])
+        out = self._contribs(term, idf_t)
         self._lru_put(self._decoded_cache, term, out, self._cache_terms)
         return out
 
@@ -1704,13 +1701,10 @@ class LocalSearcher:
                 segs = self._segments(t)
                 idx = np.flatnonzero((segs.last_doc >= r_lo)
                                      & (segs.first_doc <= r_hi))
-                d, tf, dl = self._postings(t, idx)
-                out = (d, idf[t] * self._tfnorm(tf, dl))
-                # cache only full-span decodes (subsets depend on the
-                # query)
-                if idx.size and idx.size == len(segs):
-                    self._lru_put(self._decoded_cache, t, out,
-                                  self._cache_terms)
+                # only full-span decodes are cached (subsets depend on
+                # the query)
+                out = (self._load_full(t, idf[t]) if idx.size == len(segs)
+                       else self._contribs(t, idf[t], idx))
             other_lists[t] = out
             return out
 

@@ -3,8 +3,10 @@
 Every local scorer decodes through LocalSearcher._postings (tombstone
 -masked, doc-sorted). These tests pin it against an independent decode
 read straight from parquet, pin the LM-Dirichlet AND rule for a query
-term whose postings are all tombstoned in one federated sub-index, and
-pin that LM-Dirichlet rankings ignore static boosts."""
+term whose postings are all tombstoned in one federated sub-index, pin
+that mixed phrase queries drop the searcher's tombstones even through a
+phraser opened before them, and pin that LM-Dirichlet rankings ignore
+static boosts."""
 
 import os
 import shutil
@@ -21,6 +23,7 @@ from search_engine_spark.plans import phraseq
 from search_engine_spark.plans.build_index import build_index
 from search_engine_spark.plans.deletes import delete_docs, mask_deleted
 from search_engine_spark.plans.federate import FederatedSearcher
+from search_engine_spark.plans.positions import PhraseSearcher, build_positions
 from search_engine_spark.plans.wand import LocalSearcher
 
 SOLO_DOCS = [5, 17, 23]  # the only docs holding "solo"
@@ -161,6 +164,32 @@ def test_federated_lmd_and_with_fully_tombstoned_term(spark, tmp_path):
                               mode="and") == want
     assert fed.search_lmd("alpha beta", k=20, stem=False, mode="or") == \
         ref.search_lmd("alpha beta", k=20, stem=False, mode="or")
+
+
+def test_stale_phraser_after_refresh_deletes(spark, tmp_path):
+    """A PhraseSearcher keeps the tombstones it was opened with. After
+    the LocalSearcher's refresh_deletes, search_mixed must still drop
+    the newly deleted docs and leave every survivor's score as it was
+    (deletes move no statistics, and doclens come from live postings)."""
+    d = str(tmp_path / "pos")
+    src = spark.createDataFrame(_corpus_pdf())
+    build_index(spark, src, d, n_buckets=4, segment_size=16, stem=False)
+    build_positions(spark, src, d, n_buckets=4, stem=False)
+    s, stale = LocalSearcher(d), PhraseSearcher(d)
+    queries = ['"w0 w1"', '"w1 w0"^2', '"w0 w1" w2', '"w0 w1" -w3',
+               '"w0 w2"~3', '"w0 w2"~3 w1']
+    before = {q: phraseq.search_mixed(s, stale, q, k=300, stem=False)
+              for q in queries}
+    victims = {doc for doc, _ in before['"w0 w1"'][:4]}
+    victims |= {doc for doc, _ in before['"w0 w2"~3'][:2]}
+    delete_docs(spark, d, sorted(victims))
+    s.refresh_deletes()
+    for q in queries:
+        assert before[q], q
+        for _ in range(2):  # cold, then the doclen cache warm
+            got = phraseq.search_mixed(s, stale, q, k=300, stem=False)
+            assert got == [(doc, sc) for doc, sc in before[q]
+                           if doc not in victims], q
 
 
 def test_lmd_ignores_static_boosts(plain_dir, tmp_path):
